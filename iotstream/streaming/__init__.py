@@ -15,11 +15,22 @@
   (HiveMQSource.java:86-93).
 - T7: restart-from-checkpoint replaces swallow-and-continue error
   handling (MongoDBRawData.java:46-52).
+
+Flush rule for availableNow drains: after the last data batch, a
+watermarked query runs one more micro-batch with no input rows that
+only advances the watermark and evicts state. That batch can emit rows
+only for append-mode windows and sessions, outer stream-stream joins
+and event-time timeouts. Everywhere else (update or complete mode,
+``dropDuplicatesWithinWatermark``, inner joins) it is pure fixed cost,
+and the caller skips it with ``run_available_now(...,
+flush_watermark=False)``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,50 +71,71 @@ from iotstream.sinks import ParquetUpsertSink
 UNBOUNDED_WATERMARK = "3650 days"
 
 
-def run_available_now(writer, checkpoint: str | None = None):
+def run_available_now(
+    writer, checkpoint: str | None = None, *, flush_watermark: bool = True
+):
     """Start a writeStream with availableNow trigger and block until all
-    available input is processed. Returns the finished query."""
-    if checkpoint is None:
-        checkpoint = ephemeral_dir("iotstream-ckpt-")
-    q = (
-        writer.option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # One-shot drain: this checkpoint is never revisited, so unload its
-    # state-store providers now. Long sessions that drain many ad-hoc
-    # streams (the correctness gate runs ~8) otherwise accumulate
-    # providers that the maintenance thread keeps snapshotting.
-    try:
-        from pyspark.sql import SparkSession
+    available input is processed. Returns the finished query.
 
-        spark = SparkSession.getActiveSession()
-        if spark is not None:
+    ``flush_watermark=False`` skips the trailing no-data micro-batch
+    (see the flush rule in the module docstring). Pass it only when the
+    final watermark cannot emit a row. Spark copies
+    ``noDataMicroBatches.enabled`` into the query's own session at
+    ``start()``, so it is switched off around that call only; the
+    default leaves the session conf untouched.
+
+    A checkpoint created here is deleted once the query has ended; a
+    caller-supplied one is never touched."""
+    own_checkpoint = checkpoint is None
+    if own_checkpoint:
+        checkpoint = ephemeral_dir("iotstream-ckpt-")
+    spark = writer._spark
+    try:
+        writer = writer.option("checkpointLocation", checkpoint).trigger(
+            availableNow=True
+        )
+        if flush_watermark:
+            q = writer.start()
+        else:
+            with scoped_conf(
+                spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+            ):
+                q = writer.start()
+        q.awaitTermination()
+    finally:
+        # One-shot drain: this checkpoint is never revisited, so unload
+        # its state-store providers now. Long sessions that drain many
+        # ad-hoc streams (the correctness gate runs ~8) otherwise
+        # accumulate providers that the maintenance thread keeps
+        # snapshotting.
+        try:
             spark._jvm.org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    except Exception:  # noqa: BLE001 — internal API; hygiene only
-        pass
+        except Exception:  # noqa: BLE001 — internal API; hygiene only
+            pass
+        if own_checkpoint:
+            shutil.rmtree(checkpoint, ignore_errors=True)
     return q
 
 
-class scoped_shuffle_partitions:
+@contextlib.contextmanager
+def scoped_conf(spark, key: str, value: str):
+    """Set one session conf for the ``with`` body; restore the previous
+    value on exit, also when the body raises."""
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def scoped_shuffle_partitions(spark, n: int):
     """Temporarily right-size ``spark.sql.shuffle.partitions`` — the
     number of state-store partitions a streaming query creates. A
     driver session left at the 200 default pays 200 state tasks per
     micro-batch on test-scale data; production sizes this to the
     cluster. Restores the previous value on exit."""
-
-    def __init__(self, spark, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+    return scoped_conf(spark, "spark.sql.shuffle.partitions", str(n))
 
 
 def windowed_agg_final_state(
@@ -136,5 +168,6 @@ def windowed_agg_final_state(
         agg = agg.withColumn("avg_temperature", F.round("avg_temperature", round_avg))
     sink = ParquetUpsertSink(key_cols=["window_start", *keys])
     writer = agg.writeStream.outputMode("update").foreachBatch(sink.writer())
-    run_available_now(writer)
+    # update mode: the final watermark evicts but cannot emit
+    run_available_now(writer, flush_watermark=False)
     return sink.to_df(spark)

@@ -76,15 +76,19 @@ def interval_join_pairs(
     and read back (finite correctness run).
 
     Cost floor, profiled r9 (PROFILE_r9_streaming_interval_join.json):
-    an availableNow stream-stream join always runs TWO micro-batches —
-    batch 0 joins, batch 1 emits nothing and exists to commit the
-    advanced watermark (~1 s fixed) — plus two incremental plannings
-    and per-partition state-store open/commit on both sides. The join
-    itself adds only ~0.65 s over a trivial drain of the same source
-    at sf0.1; state width beyond ~8 strictly hurts (w16/w32 measured
-    worse), w4 vs w8 is noise. All of it is per-QUERY fixed cost that
-    amortizes under a continuous trigger at production scale — the
-    bench number is micro-batch machinery, not a row-scaling term.
+    by default an availableNow stream-stream join runs TWO
+    micro-batches — batch 0 joins, batch 1 only commits the advanced
+    watermark (~1 s fixed). An inner join emits every match in the
+    batch that sees both rows, so batch 1 can never emit; the drain
+    skips it (``flush_watermark=False``) and runs one batch with one
+    incremental planning and one per-partition state-store open/commit
+    on both sides. An outer join would need the flush batch to emit
+    its unmatched rows. The join itself adds only ~0.65 s over a
+    trivial drain of the same source at sf0.1; state width beyond ~8
+    strictly hurts (w16/w32 measured worse), w4 vs w8 is noise. All of
+    it is per-QUERY fixed cost that amortizes under a continuous
+    trigger at production scale — the bench number is micro-batch
+    machinery, not a row-scaling term.
 
     WATERMARKED operator → STRICTLY-positive event-time contract on
     BOTH sides (schemas.positive_event_time): Spark initializes every
@@ -118,5 +122,6 @@ def interval_join_pairs(
         .format("parquet")
         .option("path", out_dir)
     )
-    run_available_now(writer)
+    # inner join, append mode: the final watermark cannot emit
+    run_available_now(writer, flush_watermark=False)
     return spark.read.schema(joined.schema).parquet(out_dir)
