@@ -3,8 +3,8 @@
 ``entry(spark)`` smoke-runs the flagship query at sf0.001;
 ``queries()`` exposes every implemented operator from SURVEY.md §2 as a
 (spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` gives the
-DuckDB-equivalent SQL for each (omitted only for genuinely
-non-SQL-expressible ops → driver records a weaker rows-only check).
+DuckDB-equivalent SQL for each, and ``tests/test_oracle_twins.py``
+compares every pair at sf0.001.
 
 Naming discipline: every computed column is aliased identically in the
 Spark code and the oracle SQL (the driver sorts columns by name before
@@ -43,210 +43,6 @@ from iotstream.sensorize import sensor_cte, sensorize
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
-#: Size of the driver's per-round oracle gate: only the first
-#: DRIVER_WINDOW entries of queries() are hash-graded. Single source of
-#: truth for tools/window_plan.py and tools/check_oracle.py --window.
-DRIVER_WINDOW = 50
-
-#: (name, pinned_round) pairs PINNED into the grading window
-#: regardless of grade age — the acute-churn lever: when a round
-#: changes code under a fresh green grade (the r8 neardup_editdist
-#: case), pin the affected queries with the round that changed them
-#: so the next driver run re-grades them. A pin SELF-EXPIRES once a
-#: green grade from >= its pinned_round lands in the committed
-#: artifacts — it never burns window slots after it has done its job
-#: (a never-expiring pin would reintroduce the exact manual-cleanup
-#: discipline the rotation removes). The chronic lever (grades aging
-#: out) needs no bookkeeping at all: queries() auto-rotates the
-#: stalest grades into the window (see _rotate_window). The r17 pins
-#: (7 kernel-restructured queries) all landed green in
-#: CORRECTNESS_r17.json and were pruned here — expired pins carry no
-#: behavior, but a live list must describe only live pins (VERDICT
-#: r17 item 2 / ADVICE r17). r18 pins below follow the same rule:
-#: each names a query whose kernel this optimization round
-#: restructures under a fresh green grade, and expires when its r18
-#: re-grade lands.
-FORCE_WINDOW: tuple[tuple[str, int], ...] = (
-    # r18 pins (walker-flagged stale greens after this optimization
-    # round's kernel restructurings; each expires when its r18
-    # re-grade lands):
-    #   - neardup_jaccard_exact (iotstream/ext/dedup.py): collect_set
-    #     over pre-hashed shingles replaces distinct+count+join;
-    #   - lsh_candidate_pairs banding (same file): direct array hash
-    #     replaces the transform()+to_json lambda;
-    #   - neardup_embedding_lsh (iotstream/ext/similarity.py): one
-    #     combined count+dim sizing aggregate.
-    ("dedup_clusters", 18),
-    ("dedup_clusters_lsh", 18),
-    ("dedup_report", 18),
-    ("neardup_embedding_lsh", 18),
-    ("neardup_jaccard", 18),
-    ("neardup_minhash", 18),
-)
-
-
-#: Per-process memo for _grade_ages — the rotation is computed once and
-#: reused so a grading pass and a bench pass in the same process can
-#: never see different windows (ADVICE r9).
-_GRADE_AGES_CACHE: dict[str, int] | None = None
-
-
-def _grade_ages() -> dict[str, int]:
-    """name -> latest round whose committed driver grade is green.
-
-    Green = ``hash_match`` (the full oracle gate), or — for entries
-    that deliberately omit an oracle — ``rows_match`` (the driver's
-    weaker rows-only check; without this an oracle-less entry could
-    never leave the window and would burn a grading slot forever).
-    Reads CORRECTNESS_r*.json artifacts AS COMMITTED AT HEAD (ADVICE
-    r9/r10: a glob also saw the artifact the driver had just written
-    untracked into the working tree, so a grading pass and a later
-    bench pass in the same round could rotate differently; and
-    `git ls-files` alone still read working-tree CONTENT, so a tracked
-    artifact overwritten uncommitted mid-round could diverge too —
-    `git show HEAD:<path>` pins both the file set and the content to
-    the commit the driver checked out). Falls back to the working-tree
-    file for a tracked-but-not-yet-committed artifact, and to the plain
-    glob only when git itself is unavailable; memoizes per process
-    either way (callers get a copy — the memo itself is never handed
-    out, so a caller mutating its result can't poison later rotations).
-    """
-    global _GRADE_AGES_CACHE
-    if _GRADE_AGES_CACHE is not None:
-        return dict(_GRADE_AGES_CACHE)
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-    import subprocess as _sp
-
-    here = _os.path.dirname(_os.path.abspath(__file__))
-    # (abs working-tree path, git-relative path or None). A git-relative
-    # path means "read the HEAD blob"; None means git is unavailable and
-    # the working-tree file is the only source.
-    paths: list[tuple[str, str | None]]
-    try:
-        out = _sp.run(
-            ["git", "-C", here, "ls-files", "--", "CORRECTNESS_r*.json"],
-            capture_output=True,
-            text=True,
-            timeout=10,
-        )
-        if out.returncode != 0:
-            raise OSError(out.stderr.strip()[:200])
-        paths = [
-            (_os.path.join(here, line), line)
-            for line in out.stdout.splitlines()
-            if line.strip()
-        ]
-    except (OSError, _sp.SubprocessError):
-        paths = [
-            (p, None)
-            for p in _glob.glob(_os.path.join(here, "CORRECTNESS_r*.json"))
-        ]
-    with_oracle = set(oracle_sql())
-    ages: dict[str, int] = {}
-    for path, rel in paths:
-        m = _re.search(r"_r(\d+)\.json$", _os.path.basename(path))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        text = None
-        if rel is not None:
-            # Content pinned to HEAD: a tracked artifact overwritten
-            # uncommitted in the working tree must not shift the
-            # rotation mid-round.
-            try:
-                show = _sp.run(
-                    ["git", "-C", here, "show", f"HEAD:{rel}"],
-                    capture_output=True,
-                    text=True,
-                    timeout=10,
-                )
-                if show.returncode == 0:
-                    text = show.stdout
-            except (OSError, _sp.SubprocessError):
-                pass
-        if text is None:
-            # Tracked-but-not-yet-committed (staged new artifact), or
-            # git show failed: the working tree is the best available.
-            try:
-                with open(path) as f:
-                    text = f.read()
-            except OSError:
-                continue
-        try:
-            data = _json.loads(text)
-        except ValueError:
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            green = rec.get("hash_match") or (
-                name not in with_oracle and rec.get("rows_match")
-            )
-            if green and rnd > ages.get(name, -1):
-                ages[name] = rnd
-    _GRADE_AGES_CACHE = ages
-    return dict(ages)
-
-
-def _rotate_window(
-    declared: dict, ages: dict[str, int], forced: tuple[tuple[str, int], ...]
-) -> dict:
-    """Reorder ``declared`` so the first DRIVER_WINDOW entries are the
-    grading window: still-active ``forced`` pins first-class (a pin is
-    active while the query's latest green grade predates its
-    pinned_round — it self-expires once the re-grade it asked for has
-    landed), then the stalest green grades (never-graded entries lead,
-    ties broken by declared position). RELATIVE declared order is
-    preserved on both sides of the window boundary — declaration order
-    encodes the bench cost layout (cheap batch queries lead so slot 0
-    pays JVM warmup; fixed-cost streaming/stateful and the most
-    composed queries sit last) and rotation must not scramble it.
-    """
-    names = list(declared)
-    pos = {n: i for i, n in enumerate(names)}
-    forced_in = [
-        n for n, pinned_round in forced
-        if n in pos and ages.get(n, -1) < pinned_round
-    ]
-    if len(forced_in) > DRIVER_WINDOW:
-        # Pins past slot DRIVER_WINDOW are never graded and take=0 kills
-        # all age-based rotation — loud, not silent (ADVICE r9).
-        import warnings
-
-        warnings.warn(
-            f"{len(forced_in)} active FORCE_WINDOW pins exceed "
-            f"DRIVER_WINDOW={DRIVER_WINDOW}; pins past the window are "
-            "not graded and age-based rotation is fully displaced — "
-            "trim the pin list",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    elif len(forced_in) == DRIVER_WINDOW:
-        # All pins still get graded, but age-based rotation is fully
-        # displaced this round (take=0) — worth a softer note so a
-        # stalling freshness histogram has a visible cause (ADVICE r10).
-        import warnings
-
-        warnings.warn(
-            f"active FORCE_WINDOW pins fill the entire "
-            f"DRIVER_WINDOW={DRIVER_WINDOW}; every pin is graded but "
-            "age-based rotation is displaced this round",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    forced_set = set(forced_in)
-    selectable = [n for n in names if n not in forced_set]
-    selectable.sort(key=lambda n: (ages.get(n, -1), pos[n]))
-    take = max(0, DRIVER_WINDOW - len(forced_in))
-    window = forced_set | set(selectable[:take])
-    ordered = [n for n in names if n in window]
-    ordered += [n for n in names if n not in window]
-    return {n: declared[n] for n in ordered}
 
 # ---------------------------------------------------------------- helpers
 
@@ -1916,45 +1712,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Declaration order is the driver's check order (first 50 get the
-    full oracle gate per round). The window SELF-ROTATES (r9, closing
-    VERDICT r8 item 1 permanently): the first DRIVER_WINDOW slots are
-    computed from the committed CORRECTNESS_r*.json grade ages —
-    FORCE_WINDOW pins first (acute code churn under fresh grades),
-    then stalest-green-first (never-graded entries lead), relative
-    declared order preserved on both sides so the bench cost layout
-    (cheap batch queries lead, JVM warmup lands on slot 0; streaming/
-    stateful fixed costs and the most composed query sit last) stays
-    intact. Rotation is deterministic given the checked-out repo, and
-    a rotation failure falls back to plain declared order — grading
-    must never break because bookkeeping did. For r9 the computed
-    window equals the hand-curated one it replaces: all 39 r5-vintage
-    grades, the 4 walker-flagged stale greens (neardup_editdist
-    mandatory — its max_block default changed in r8), the 4
-    similarity.py-composed regression guards, and the 5 oldest r6
-    grades; `tests/test_window_rotation.py` asserts the invariants."""
-    declared = _declared_queries()
-    try:
-        rotated = _rotate_window(declared, _grade_ages(), FORCE_WINDOW)
-    except Exception as exc:  # noqa: BLE001 — rotation must never break grading
-        import warnings
-
-        warnings.warn(
-            f"grading-window rotation failed ({type(exc).__name__}: {exc}); "
-            "falling back to declared order — grades will age without "
-            "rotation until this is fixed",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return declared
-    return rotated
-
-
-def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full inventory in cost-layout order (see queries() docstring);
-    the grading window is computed by _rotate_window, not by hand."""
+    """Every declared query, in cost-layout order: cheap batch queries
+    lead, so the first slot pays JVM warmup, and the streaming and
+    stateful drains come after them. The bench times queries in this
+    order, so keep it stable for per-query timings to compare."""
     return {
-        # --- r9 window A: r5-vintage grades — cheap batch queries lead
         "json_parse": q_json_parse,
         "distinct_users": q_distinct_users,
         "high_value_purchasers": q_high_value_purchasers,
@@ -1980,28 +1742,18 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "funnel": q_funnel,
         "cohort_retention": q_cohort_retention,
         "scd2_history": q_scd2_history,
-        # --- r9 window D: 5 oldest r6 grades (drain the r6 cohort)
         "window_min": q_window_min,
         "hopping_window_max": q_hopping_window_max,
         "rolling_avg": q_rolling_avg,
         "window_avg": q_window_avg,
         "asof_join": q_asof_join,
-        # --- r9 window B: walker-flagged stale greens (r8 touched
-        # dedup.py/similarity.py under these grades; neardup_editdist's
-        # max_block default CHANGED in r8 — re-grade is mandatory)
         "dedup_exact": q_dedup_exact,
         "neardup_editdist": q_neardup_editdist,
         "similarity_topk": q_similarity_topk,
         "neardup_embedding": q_neardup_embedding,
-        # --- r9 window C: guards on similarity.py code touched THIS
-        # round (recall-honesty auto-multiprobe + ADVICE guard_stats/
-        # gate-docstring fixes) — keeps their r8 grades from going
-        # code-stale the way B did
         "similarity_topk_lsh": q_similarity_topk_lsh,
         "similarity_topk_ivf": q_similarity_topk_ivf,
         "neardup_embedding_lsh": q_neardup_embedding_lsh,
-        # --- r9 window A (cont.): multimodal + streaming/stateful —
-        # fixed micro-batch cost, LAST so cheap slots aren't confounded
         "multimodal_ingest": q_multimodal_ingest,
         "multimodal_decode": q_multimodal_decode,
         "multimodal_features": q_multimodal_features,
@@ -2014,12 +1766,7 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_interval_join": q_streaming_interval_join,
         "streaming_sessionize": q_streaming_sessionize,
         "stateful_quality_monitor": q_stateful_quality_monitor,
-        # dedup_report composes neardup_embedding_lsh (similarity.py
-        # changed this round → its r8 grade would go code-stale
-        # out-of-window); most composed query sits LAST
         "dedup_report": q_dedup_report,
-        # ---------- position 51+: r8-graded cohort (fresh) and the
-        # r6 remainder (rotates into the r10 window)
         "filter_validity": q_filter_validity,
         "window_max": q_window_max,
         "throughput_count": q_throughput_count,
@@ -2066,7 +1813,6 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "neardup_minhash": q_neardup_minhash,
         "dedup_clusters": q_dedup_clusters,
         "dedup_clusters_lsh": q_dedup_clusters_lsh,
-        # r6 remainder
         "interval_join": q_interval_join,
         "market_share": xtpch.market_share,
         "product_profit": xtpch.product_profit,
@@ -2105,6 +1851,11 @@ def _declared_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             else {}
         ),
     }
+
+
+# Exists only because perfbench/run.py reads this name; the harness
+# under perfbench/ changes only together with the benchmark itself.
+_declared_queries = queries
 
 
 _SENSOR_FLAT = (

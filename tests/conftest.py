@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import SparkSession
+
+from iotstream.schemas import FIXTURE_TABLES, table_path
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -18,3 +21,13 @@ def spark():
     )
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def duck():
+    """DuckDB with a view per fixture table, for the oracle twins."""
+    con = duckdb.connect()
+    for t in FIXTURE_TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
+    yield con
+    con.close()

@@ -1,44 +1,25 @@
-"""A1-A3 windowed aggregates vs the DuckDB oracle (SURVEY.md §5.2)."""
+"""A1-A3 windowed aggregates vs the DuckDB oracle (SURVEY.md §5.2).
+
+A named smoke check of four representative queries; the full sweep over
+every declared query is ``tests/test_oracle_twins.py``.
+"""
 
 from __future__ import annotations
 
-import duckdb
-
-import __spark_entry__ as entrymod
-from iotstream.schemas import FIXTURE_TABLES, table_path
-from tests.conftest import SF_DIR
-from tools.check_oracle import frame_key
+from tests.test_oracle_twins import assert_matches_oracle
 
 
-def _oracle(sql: str):
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
-    res = con.sql(sql)
-    return [d[0] for d in res.description], res.fetchall()
+def test_flagship_matches_oracle(spark, duck):
+    assert_matches_oracle(spark, duck, "flagship")
 
 
-def _assert_match(spark, name: str):
-    sdf = entrymod.queries()[name](spark, SF_DIR)
-    ocols, orows = _oracle(entrymod.oracle_sql()[name])
-    sc, sk = frame_key(sdf.columns, sdf.collect())
-    oc, ok = frame_key(ocols, orows)
-    assert sc == oc
-    assert len(sk) == len(ok)
-    assert sk == ok
+def test_window_avg_matches_oracle(spark, duck):
+    assert_matches_oracle(spark, duck, "window_avg")
 
 
-def test_flagship_matches_oracle(spark):
-    _assert_match(spark, "flagship")
+def test_pricing_summary_matches_oracle(spark, duck):
+    assert_matches_oracle(spark, duck, "pricing_summary")
 
 
-def test_window_avg_matches_oracle(spark):
-    _assert_match(spark, "window_avg")
-
-
-def test_pricing_summary_matches_oracle(spark):
-    _assert_match(spark, "pricing_summary")
-
-
-def test_throughput_matches_oracle(spark):
-    _assert_match(spark, "throughput_count")
+def test_throughput_matches_oracle(spark, duck):
+    assert_matches_oracle(spark, duck, "throughput_count")

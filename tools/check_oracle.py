@@ -4,7 +4,7 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same fixture dir, then compares row count, sorted column
 names, and values (rows sorted, order-insensitive). Usage:
 
-    python tools/check_oracle.py [--tz=ZONE] [--window] [sf_dir] [query ...]
+    python tools/check_oracle.py [--tz=ZONE] [sf_dir] [query ...]
 
 Sweep at MULTIPLE scale factors: boundary-precision bugs hide below
 data density (a seconds-truncated RANGE frame key diverged from its
@@ -46,18 +46,34 @@ def frame_key(cols, rows):
     return [cols[i] for i in order], out
 
 
+def compare_frames(scols, srows, ocols, orows) -> str | None:
+    """Why a Spark result differs from its DuckDB twin, or None when row
+    count, sorted column names and order-insensitive values all match.
+    ``tests/test_oracle_twins.py`` grades with this same function."""
+    sc, sk = frame_key(scols, srows)
+    oc, ok = frame_key(ocols, orows)
+    if len(srows) != len(orows):
+        return f"rows {len(srows)} vs {len(orows)}"
+    if sc != oc:
+        return f"cols {sc} vs {oc}"
+    if sk != ok:
+        bad = next(i for i, (a, b) in enumerate(zip(sk, ok)) if a != b)
+        return (
+            f"values differ, first at sorted-row {bad}:\n"
+            f"      spark : {sk[bad]}\n"
+            f"      duckdb: {ok[bad]}"
+        )
+    return None
+
+
 def main() -> int:
     # --tz=ZONE runs the Spark session under a hostile timezone (the
     # driver's is unknown); queries must self-normalize via use_utc.
     args = sys.argv[1:]
     tz = "UTC"
-    window = False  # --window: only the driver's first-50 gradeable slots
     for a in list(args):
         if a.startswith("--tz="):
             tz = a.split("=", 1)[1]
-            args.remove(a)
-        elif a == "--window":
-            window = True
             args.remove(a)
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
@@ -76,12 +92,9 @@ def main() -> int:
     for t in FIXTURE_TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    if window:
-        queries = dict(list(queries.items())[: entrymod.DRIVER_WINDOW])
     failures = []
-    for name, fn in queries.items():
+    for name, fn in entrymod.queries().items():
         if only and name not in only:
             continue
         # Re-pin the requested TZ before EVERY query: use_utc from an
@@ -95,12 +108,6 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {e}")
             continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (rows-only check)")
-            if len(srows) == 0 and name != "neardup_minhash":
-                failures.append(name)
-                print(f"FAIL  {name}: zero rows on rows-only query")
-            continue
         try:
             ores = con.sql(oracles[name])
             ocols = [d[0] for d in ores.description]
@@ -109,20 +116,10 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {e}")
             continue
-        sc, sk = frame_key(scols, srows)
-        oc, ok = frame_key(ocols, orows)
-        if len(srows) != len(orows):
+        diff = compare_frames(scols, srows, ocols, orows)
+        if diff:
             failures.append(name)
-            print(f"FAIL  {name}: rows {len(srows)} vs {len(orows)}")
-        elif sc != oc:
-            failures.append(name)
-            print(f"FAIL  {name}: cols {sc} vs {oc}")
-        elif sk != ok:
-            failures.append(name)
-            bad = next(i for i, (a, b) in enumerate(zip(sk, ok)) if a != b)
-            print(f"FAIL  {name}: values differ, first at sorted-row {bad}:")
-            print(f"      spark : {sk[bad]}")
-            print(f"      duckdb: {ok[bad]}")
+            print(f"FAIL  {name}: {diff}")
         else:
             print(f"OK    {name}: {len(srows)} rows")
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
