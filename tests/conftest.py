@@ -23,11 +23,16 @@ def spark():
     s.stop()
 
 
-@pytest.fixture(scope="session")
-def duck():
+def open_duck(sf_dir: str):
     """DuckDB with a view per fixture table, for the oracle twins."""
     con = duckdb.connect()
     for t in FIXTURE_TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(SF_DIR, t)}'")
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{table_path(sf_dir, t)}'")
+    return con
+
+
+@pytest.fixture(scope="session")
+def duck():
+    con = open_duck(SF_DIR)
     yield con
     con.close()

@@ -1,10 +1,10 @@
-"""Matrix/sweep tooling contracts (r13, ADVICE r12 + VERDICT r12 item 1).
+"""Bench and sweep tooling contracts.
 
-No Spark session — these pin the pure-Python plumbing: the bench
-leg's contamination parsing and shared threshold, the per-round leg
-list (unicode + reach gates actually wired in), and the digest-keyed
-fixture markers that stop edited mutation specs from silently serving
-stale cached fixtures.
+No Spark session — these pin the pure-Python plumbing: bench.py's
+boolean env parsing and its one compact stdout line, plus
+tools/degenerate_sweep.py's digest-keyed fixture markers (an edited
+mutation spec must not silently serve a stale cached fixture) and the
+hand-listed query targets that must stay pinned to declared queries.
 """
 
 from __future__ import annotations
@@ -18,152 +18,6 @@ sys.path.insert(0, os.path.join(REPO, "tools"))
 sys.path.insert(0, REPO)
 
 import degenerate_sweep as ds  # noqa: E402
-import run_matrix as rm  # noqa: E402
-
-
-def test_bench_contaminated_parses_flag_states():
-    line = json.dumps({"metric": "x", "loadavg": {"contaminated": True}})
-    assert rm._bench_contaminated(f"noise\n{line}\n") is True
-    line = json.dumps({"metric": "x", "loadavg": {"contaminated": False}})
-    assert rm._bench_contaminated(line) is False
-    # no parsable line / no flag → None (treated as "unavailable")
-    assert rm._bench_contaminated("no json here") is None
-    assert rm._bench_contaminated(json.dumps({"metric": "x"})) is None
-
-
-def _verdict_inputs(
-    steal_total: int,
-    wall: float = 100.0,
-    ncpu: int = 32,
-    start_load: float = 0.1,
-    burst: tuple[float, int] | None = None,
-):
-    """Synthesize a (load_start, load_end, per_query_load) triple with
-    a given total steal over ``wall`` seconds at 100 Hz. ``burst``
-    places ALL of an extra (duration, jiffies) steal burst inside one
-    mid-session window so the session average stays low."""
-    start = {"mono": 0.0, "loadavg": [start_load, 0.1, 0.1], "steal_jiffies": 0}
-    per_query = {
-        "q1": {"mono": wall * 0.4, "load1": 5.0, "steal_jiffies": int(steal_total * 0.4)},
-    }
-    if burst is not None:  # chain order matters: insert between q1 and q2
-        dur, jiffies = burst
-        per_query["q1b"] = {
-            "mono": wall * 0.4 + dur,
-            "load1": 5.0,
-            "steal_jiffies": int(steal_total * 0.4) + jiffies,
-        }
-    extra = burst[1] if burst is not None else 0
-    per_query["q2"] = {
-        "mono": wall * 0.8,
-        "load1": 5.0,
-        "steal_jiffies": int(steal_total * 0.8) + extra,
-    }
-    end = {"mono": wall, "loadavg": [5.0, 3.0, 1.0], "steal_jiffies": steal_total + extra}
-    return start, end, per_query
-
-
-def test_contamination_verdict_catches_r13_steal_band():
-    """VERDICT r13 item 2: the r13 matrix captures (steal_ratio
-    0.012-0.032, ~32-40% slower than the same code idle) all
-    self-certified clean under the old 0.05 threshold. Replay that
-    band against the pure verdict: it must now flag 'steal'."""
-    import bench
-
-    wall, ncpu, hz = 109.2, 32, 100
-    for band_ratio in (0.012, 0.016, 0.032):
-        jiffies = int(band_ratio * wall * hz * ncpu)
-        start, end, pq = _verdict_inputs(jiffies, wall=wall, ncpu=ncpu)
-        v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-        assert "steal" in v["causes"], band_ratio
-        assert v["thresholds"]["steal_ratio"] == 0.01
-
-
-def test_contamination_verdict_idle_band_stays_clean():
-    """An idle-band capture (steal 0.0003-0.002, the BENCH_IDLE_r13 /
-    r12 regime) must still read plain clean — the tightened gate must
-    not start flagging the reference captures."""
-    import bench
-
-    wall, ncpu, hz = 82.3, 32, 100
-    for idle_ratio in (0.0003, 0.002, 0.009):
-        jiffies = int(idle_ratio * wall * hz * ncpu)
-        start, end, pq = _verdict_inputs(jiffies, wall=wall, ncpu=ncpu)
-        v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-        assert v["causes"] == [], idle_ratio
-        assert v["steal_ratio"] <= 0.01
-
-
-def test_contamination_verdict_flags_localized_burst():
-    """A 3-second 60%-steal burst inside one query window dilutes to
-    ~0.6% over a 300 s session — under the session threshold — but
-    invalidates the queries it landed on. The windowed detector must
-    flag it; the same chain without the burst must stay clean."""
-    import bench
-
-    wall, ncpu, hz = 300.0, 32, 100
-    # burst: 3 s window in which 60% of cycles are stolen
-    burst_jiffies = int(0.6 * 3.0 * hz * ncpu)
-    start, end, pq = _verdict_inputs(
-        0, wall=wall, ncpu=ncpu, burst=(3.0, burst_jiffies)
-    )
-    v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-    assert v["steal_ratio"] < 0.01  # diluted: session gate alone misses it
-    assert "steal_burst" in v["causes"]
-    start, end, pq = _verdict_inputs(0, wall=wall, ncpu=ncpu)
-    v = bench.contamination_verdict(start, end, pq, wall, ncpu, 32, hz)
-    assert v["causes"] == []
-
-
-def test_contamination_verdict_tolerates_missing_signals():
-    """Pre-r14 sample shapes (no mono field) and /proc-less platforms
-    (steal -1) must degrade to 'signal unavailable', not crash or
-    false-flag."""
-    import bench
-
-    start = {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": -1}
-    end = {"loadavg": [5.0, 3.0, 1.0], "steal_jiffies": -1}
-    pq = {"q1": {"load1": 5.0, "steal_jiffies": -1}}
-    v = bench.contamination_verdict(start, end, pq, 100.0, 32, 32, 100)
-    assert v["causes"] == []
-    assert v["steal_ratio"] == -1.0
-    assert v["steal_ratio_window_max"] == -1.0
-
-
-def test_bench_threshold_shared_with_bench_py():
-    """ADVICE r12: the settle gate must read bench.py's own threshold,
-    not a re-derived copy that silently diverges."""
-    import bench
-
-    assert rm._bench_threshold() == bench.load_at_start_threshold()
-
-
-def test_code_digest_excludes_round_artifacts_only():
-    """ADVICE r13: the matrix must bind to code state, not commit hash
-    — artifact-only commits (MATRIX/BENCH/CORRECTNESS JSONs, judge
-    docs) must not change the digest, while engine/tests/tools must
-    be covered by it."""
-    for rel in (
-        "MATRIX_r13.json", "BENCH_r13.json", "BENCH_FULL.json",
-        "CORRECTNESS_r13.json", "REACH_AUDIT_r13.json", "VERDICT.md",
-        "ADVICE.md", "PLANS.md", "UNICODE_PROBE_r13.json",
-    ):
-        assert rm.is_round_artifact(rel), rel
-    for rel in (
-        "bench.py", "__spark_entry__.py", "iotstream/ext/dedup.py",
-        "tests/test_property.py", "tools/run_matrix.py", "README.md",
-        "SURVEY.md",
-    ):
-        assert not rm.is_round_artifact(rel), rel
-    d = rm.code_digest()
-    assert d and len(d) == 16 and d == rm.code_digest()  # deterministic
-
-
-def test_build_legs_wires_round_stamped_gates():
-    legs = dict(rm.build_legs(13))
-    assert "unicode" in legs and legs["unicode"][-1] == "13"
-    assert "reach" in legs and legs["reach"][-1] == "13"
-    assert list(dict(rm.build_legs(13)))[-1] == "bench"  # bench runs last
 
 
 def test_spec_digest_keys_fixture_markers(tmp_path):
@@ -243,225 +97,6 @@ def test_hostile_doc_twins_shape():
     assert diff == 1  # single-character edit
 
 
-def _qwin(ratio: float, *, sec: float = 2.0, load1: float = 3.0,
-          hz: int = 100, ncpu: int = 32, t0: float = 10.0) -> dict:
-    """One per-query timing window with the given steal fraction."""
-    return {
-        "mono0": t0, "steal0": 1000,
-        "mono1": t0 + sec,
-        "steal1": 1000 + int(ratio * sec * hz * ncpu),
-        "load1": load1, "retries": 0,
-    }
-
-
-def test_splice_verdict_certifies_clean_windows_despite_session_steal():
-    """VERDICT r14 item 1: steal landing BETWEEN timing windows (warm
-    -ups, sampling gaps) inflates the session average without touching
-    any reported number — the exact false-contamination shape that ate
-    the r13/r14 bench legs. All-clean windows must certify even when
-    the session detector reads a steal band."""
-    import bench
-
-    start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": 0}
-    wins = {f"q{i}": _qwin(0.0005, t0=10.0 + 3 * i) for i in range(5)}
-    v = bench.splice_verdict(start, wins, 32, 32, 100)
-    assert v["causes"] == []
-    assert not v["contaminated"]
-    assert v["dirty"] == []
-
-
-def test_splice_verdict_flags_dirty_window():
-    """A single query window above the per-query gate dirties the
-    capture and names the query."""
-    import bench
-
-    start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": 0}
-    wins = {
-        "q_clean": _qwin(0.002),
-        "q_dirty": _qwin(0.08, t0=20.0),
-    }
-    v = bench.splice_verdict(start, wins, 32, 32, 100)
-    assert v["causes"] == ["steal_query_windows"]
-    assert v["dirty"] == ["q_dirty"]
-    assert v["window_ratios"]["q_dirty"] > bench.PER_QUERY_STEAL_GATE
-
-
-def test_splice_verdict_r13_band_ratio_is_dirty_per_window():
-    """The r13 band (1.2-3.2% steal, measured ~32-40% inflation) must
-    read dirty at the per-window level too — the per-query gate matches
-    the session gate (0.01), just above idle noise (0.0003-0.002)."""
-    import bench
-
-    start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": 0}
-    for ratio in (0.012, 0.032):
-        v = bench.splice_verdict(
-            start, {"q": _qwin(ratio, sec=5.0)}, 32, 32, 100
-        )
-        assert v["dirty"] == ["q"], ratio
-    for ratio in (0.0003, 0.002, 0.009):
-        v = bench.splice_verdict(
-            start, {"q": _qwin(ratio, sec=5.0)}, 32, 32, 100
-        )
-        assert v["dirty"] == [], ratio
-
-
-def test_splice_verdict_unknown_windows_surface_not_flag():
-    """Missing steal data (non-Linux, sub-50ms window) degrades to
-    'unknown', never a false flag or a crash."""
-    import bench
-
-    start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": -1}
-    wins = {
-        "q_nosteal": {"mono0": 1.0, "steal0": -1, "mono1": 3.0,
-                      "steal1": -1, "load1": 2.0, "retries": 0},
-        "q_tiny": _qwin(0.9, sec=0.01),
-    }
-    v = bench.splice_verdict(start, wins, 32, 32, 100)
-    assert not v["contaminated"]
-    assert sorted(v["unknown"]) == ["q_nosteal", "q_tiny"]
-
-
-def test_splice_verdict_keeps_load_causes():
-    """load_at_start and load_during_sweep still apply — per-window
-    steal certification must not weaken the co-tenant load detectors."""
-    import bench
-
-    busy_start = {"loadavg": [30.0, 10.0, 5.0], "steal_jiffies": 0}
-    v = bench.splice_verdict(busy_start, {"q": _qwin(0.0)}, 32, 32, 100)
-    assert "load_at_start" in v["causes"]
-    idle_start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": 0}
-    v = bench.splice_verdict(
-        idle_start, {"q": _qwin(0.0, load1=200.0)}, 32, 32, 100
-    )
-    assert "load_during_sweep" in v["causes"]
-
-
-def test_splice_verdict_errored_query_excluded_from_dirty():
-    """ADVICE r15: a query that ERRORS during a steal burst reports no
-    number (timing -1.0) and can never be re-timed clean — its dirty
-    window must not permanently flip the headline flag. Its ratio stays
-    in window_ratios for transparency; without `timings` the old
-    (stricter) behavior is preserved."""
-    import bench
-
-    start = {"loadavg": [0.2, 0.1, 0.1], "steal_jiffies": 0}
-    wins = {
-        "q_ok": _qwin(0.002),
-        "q_err": _qwin(0.08, t0=20.0),
-        "q_err_unknown": _qwin(0.9, sec=0.01, t0=30.0),
-    }
-    timings = {"q_ok": 2.0, "q_err": -1.0, "q_err_unknown": -1.0}
-    v = bench.splice_verdict(start, wins, 32, 32, 100, timings=timings)
-    assert not v["contaminated"]
-    assert v["dirty"] == []
-    assert v["unknown"] == []  # errored queries report no number at all
-    assert v["window_ratios"]["q_err"] > bench.PER_QUERY_STEAL_GATE
-    # Without timings the verdict stays strict (pure-window behavior).
-    v2 = bench.splice_verdict(start, wins, 32, 32, 100)
-    assert v2["dirty"] == ["q_err"]
-    # A REPORTED dirty number still flags even when another errored.
-    timings3 = {"q_ok": 2.0, "q_err": 3.0, "q_err_unknown": -1.0}
-    v3 = bench.splice_verdict(start, wins, 32, 32, 100, timings=timings3)
-    assert v3["dirty"] == ["q_err"]
-    assert v3["contaminated"]
-
-
-def test_stray_process_guard_detects_matching_process():
-    """VERDICT r15 item 6: a prior session's bench/chaser process alive
-    at matrix time must be surfaced. The guard sees a live process
-    that _is_stray_cmd recognizes, never lists itself/ancestors
-    (this pytest's own chain), and stops reporting once it exits."""
-    import subprocess
-    import time as _time
-
-    # Two commands so bash can't tail-call exec into sleep (which
-    # would replace the cmdline and drop the marker).
-    proc = subprocess.Popen(
-        ["bash", "-c", "sleep 30; true # bench_idle_chaser marker"],
-        stdout=subprocess.DEVNULL,
-        stderr=subprocess.DEVNULL,
-    )
-    try:
-        found = None
-        for _ in range(20):  # /proc visibility is immediate; retry anyway
-            found = {s["pid"]: s for s in rm.stray_processes()}
-            if proc.pid in found:
-                break
-            _time.sleep(0.1)
-        assert proc.pid in found
-        assert "bench_idle_chaser" in found[proc.pid]["cmd"]
-        assert os.getpid() not in found
-    finally:
-        proc.kill()
-        proc.wait()
-    # The marker process is gone; other (real) strays on a busy dev
-    # machine may legitimately remain — assert only about ours.
-    assert proc.pid not in {s["pid"] for s in rm.stray_processes()}
-
-
-def test_fit_compact_caps_stdout_line():
-    """r15 regression: the compact stdout line grew to 2349 chars and
-    the driver's ~2000-char tail capture truncated it ("parsed": null
-    → the round lost its trend row). _fit_compact must shed optional
-    blocks in the fixed order until the line fits, never dropping the
-    metric/value/queries/certified core, and must leave an
-    already-small line untouched."""
-    import json
-
-    import bench
-
-    small = {"metric": "m", "value": 1.0, "unit": "sec",
-             "queries": {"flagship": 0.5}, "sf": 0.1,
-             "certified": {"all_clean": True}}
-    assert bench._fit_compact(dict(small)) == small  # no-op, no marker
-
-    big = {
-        "metric": "total_query_seconds_sf0.1", "value": 88.0,
-        "unit": "sec",
-        "queries": {f"query_{i:02d}": 1.0 + i for i in range(20)},
-        "sf": 0.1, "n_queries": 128, "n_errors": 0, "sub_second": 90,
-        "loadavg": {"start": 0.2, "max": 10.0, "steal_ratio": 0.02,
-                    "contaminated": False,
-                    "contamination_causes": ["x" * 40],
-                    "session_contaminated": True,
-                    "session_causes": ["y" * 40]},
-        "certified": {"all_clean": True, "dirty": [], "unknown": 0,
-                      "requeried": 14, "gate": 0.01},
-        "isolated": {f"iso_query_name_{i:02d}": 3.0 for i in range(10)},
-        "isolated_steal": {"max": 0.05, "dirty": ["a" * 30] * 10,
-                           "unknown": 0},
-        "errors": {f"err_{i}": "boom " * 16 for i in range(3)},
-        "full": "BENCH_FULL.json",
-    }
-    big["queries"]["flagship"] = 0.4
-    assert len(json.dumps(big)) > bench.COMPACT_LINE_BUDGET
-    fitted = bench._fit_compact(big)
-    line = json.dumps(fitted)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET
-    assert fitted["trimmed"]  # sheds are declared
-    for core in ("metric", "value", "unit", "queries", "sf",
-                 "certified", "loadavg"):
-        assert core in fitted, core
-    assert "flagship" in fitted["queries"]  # never trimmed away
-    # Shed order: isolated goes before queries are narrowed.
-    assert fitted["trimmed"][0] == "isolated"
-
-
-def test_window_clean_requires_measured_ratio():
-    """ADVICE r15: the ingest best-of loop must treat an unmeasurable
-    window (-1.0) as NOT clean — `ratio <= gate` alone would let an
-    unknown drain displace a certified one and trip the early break."""
-    import bench
-
-    assert bench.window_clean(_qwin(0.002), 100, 32)
-    assert not bench.window_clean(_qwin(0.08), 100, 32)
-    # sub-MIN_WINDOW_SEC span → ratio -1.0 → not clean
-    assert not bench.window_clean(_qwin(0.0, sec=0.01), 100, 32)
-    # missing steal data → ratio -1.0 → not clean
-    nosteal = {"mono0": 1.0, "steal0": -1, "mono1": 3.0, "steal1": -1}
-    assert not bench.window_clean(nosteal, 100, 32)
-
-
 def test_zerodiv_targets_are_declared_and_shapes_hold():
     """r15 zero-divisor class (VERDICT r14 item 5): targets stay
     pinned to declared queries; the derived shapes keep their
@@ -513,213 +148,6 @@ def test_zerodiv_targets_are_declared_and_shapes_hold():
             assert 10 <= temp(e) <= 50 and 50 <= hum(e) <= 80, e
 
 
-def test_code_digest_strips_generated_readme_block():
-    """ADVICE r14: the README embeds a bench-trend table regenerated
-    from round artifacts — the digest must not move when ONLY the
-    marked generated block changes, and must move for real edits."""
-    body = (
-        b"# Title\nhand-written\n"
-        b"<!-- generated: tool -->\n| old table |\n"
-        b"<!-- end generated -->\ntail\n"
-    )
-    body2 = body.replace(b"| old table |", b"| new table row |")
-    assert rm.strip_generated_blocks(body) == rm.strip_generated_blocks(body2)
-    body3 = body.replace(b"hand-written", b"edited prose")
-    assert rm.strip_generated_blocks(body) != rm.strip_generated_blocks(body3)
-    # unterminated begin marker strips to EOF (half-regenerated table)
-    trunc = body.split(b"<!-- end generated -->")[0]
-    assert rm.strip_generated_blocks(trunc) == b"# Title\nhand-written\n"
-    # no markers → byte-identical passthrough
-    plain = b"no markers here\n"
-    assert rm.strip_generated_blocks(plain) == plain
-
-
-class _ScriptedBand:
-    """Scripted steal-band machinery for splice_dirty: each sample
-    advances a fake clock; the band schedule decides how much steal
-    each inter-sample window accrues."""
-
-    def __init__(self, window_ratios: list[float], hz=100, ncpu=32):
-        self.ratios = list(window_ratios)  # consumed per timing window
-        self.hz, self.ncpu = hz, ncpu
-        self.t = 100.0
-        self.steal = 50_000
-        self.waits = 0
-
-    def clock(self) -> float:
-        return self.t
-
-    def wait(self, budget, probe_sec=2.0):
-        self.waits += 1
-        self.t += 1.0
-
-    def sample(self) -> dict:
-        # pair of samples brackets one timing window: advance 2 s and
-        # accrue the next scripted ratio on the CLOSING sample
-        if getattr(self, "_open", False):
-            ratio = self.ratios.pop(0) if self.ratios else 0.0
-            self.steal += int(ratio * 2.0 * self.hz * self.ncpu)
-            self._open = False
-        else:
-            self._open = True
-        self.t += 2.0
-        return {"mono": self.t, "steal_jiffies": self.steal,
-                "loadavg": [1.0, 1.0, 1.0]}
-
-
-def test_splice_dirty_retimes_until_clean_and_splices():
-    """A dirty query re-timed under a band that lifts on the second
-    attempt: the clean re-run's number and window replace the dirty
-    ones; the clean query is never touched."""
-    import bench
-
-    band = _ScriptedBand([0.08, 0.001])  # attempt1 dirty, attempt2 clean
-    timings = {"q_dirty": 5.0, "q_clean": 1.0}
-    wins = {
-        "q_dirty": _qwin(0.09),
-        "q_clean": _qwin(0.001, t0=20.0),
-    }
-    calls = []
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: calls.append(n) or 2.5,
-        100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert calls == ["q_dirty", "q_dirty"]
-    assert rec == {"q_dirty": {"original_sec": 5.0, "attempts": 2,
-                               "certified": True}}
-    assert timings == {"q_dirty": 2.5, "q_clean": 1.0}
-    assert wins["q_dirty"]["retries"] == 2
-    v = bench.splice_verdict(
-        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, wins, 32, 32, 100
-    )
-    assert not v["contaminated"]
-
-
-def test_splice_dirty_persistent_band_keeps_number_and_reports():
-    """A band that never lifts: max_attempts re-runs, the LAST dirty
-    measurement stays, and the verdict still names the query."""
-    import bench
-
-    band = _ScriptedBand([0.08, 0.09, 0.07])
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: 2.5, 100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert rec["q"] == {"original_sec": 5.0, "attempts": 3,
-                        "certified": False}
-    assert timings["q"] == 5.0  # dirty re-runs never splice
-    v = bench.splice_verdict(
-        {"loadavg": [0.1, 0.1, 0.1], "steal_jiffies": 0}, wins, 32, 32, 100
-    )
-    assert v["dirty"] == ["q"]
-
-
-def test_splice_dirty_budget_bounds_the_pass():
-    """An exhausted budget stops the loop before any attempt — the
-    sweep can never hang on a permanent band."""
-    import bench
-
-    band = _ScriptedBand([0.08])
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, lambda n: 2.5, 100, 32, budget_sec=0.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert rec["q"]["attempts"] == 0 and not rec["q"]["certified"]
-    assert band.waits == 0
-
-
-def test_splice_dirty_errored_query_keeps_original():
-    """A re-run that raises keeps the original number and stops
-    retrying that query (regression elsewhere must not spin)."""
-    import bench
-
-    band = _ScriptedBand([0.001])
-
-    def boom(name):
-        raise RuntimeError("transient")
-
-    timings = {"q": 5.0}
-    wins = {"q": _qwin(0.09)}
-    rec = bench.splice_dirty(
-        timings, wins, boom, 100, 32, budget_sec=500.0,
-        wait_fn=band.wait, sample_fn=band.sample, clock=band.clock,
-    )
-    assert timings["q"] == 5.0
-    assert rec["q"]["attempts"] == 0 and not rec["q"]["certified"]
-
-
-def test_fit_compact_last_resort_shed_fits_pathological_core():
-    """ADVICE r16: after the six ordered sheds the line could STILL
-    exceed the budget (e.g. dozens of long dirty-query names inside
-    certified.dirty — a core field the ordered steps never touch) and
-    _fit_compact returned it oversized silently, re-arming the r15
-    'parsed: null' truncation. The last-resort shed must trim queries
-    to the flagship, cap the dirty list, and declare itself."""
-    import json
-
-    import bench
-
-    big = {
-        "metric": "total_query_seconds_sf0.1", "value": 88.0,
-        "unit": "sec",
-        "queries": {f"query_name_padded_{i:03d}": 1.0 + i for i in range(60)},
-        "sf": 0.1,
-        "loadavg": {"contaminated": True,
-                    "contamination_causes": ["steal_query_windows"]},
-        "certified": {"all_clean": False,
-                      "dirty": [f"very_long_dirty_query_name_{i:03d}"
-                                for i in range(50)],
-                      "unknown": 0, "requeried": 50, "gate": 0.01},
-        "isolated": {f"iso_{i}": 3.0 for i in range(10)},
-        "isolated_steal": {"max": 0.05, "dirty": [], "unknown": 0},
-        "errors": {},
-        "full": "BENCH_FULL.json",
-    }
-    big["queries"]["flagship"] = 0.4
-    fitted = bench._fit_compact(big)
-    line = json.dumps(fitted)
-    assert len(line) <= bench.COMPACT_LINE_BUDGET, len(line)
-    assert "last_resort" in fitted["trimmed"]
-    assert fitted["queries"] == {"flagship": 0.4}
-    dirty = fitted["certified"]["dirty"]
-    # ADVICE r17: long names are also truncated (the reachable overflow
-    # shape in the production caller is 5 long names, already count-capped)
-    assert len(dirty) == 6 and dirty[-1] == "+45 more"
-    assert all(len(n) <= 24 for n in dirty)
-    for core in ("metric", "value", "unit", "sf", "certified", "loadavg"):
-        assert core in fitted, core
-
-
-def test_stray_guard_ignores_mentions_and_flags_real_runs():
-    """ADVICE r16: substring matching flagged any process whose
-    cmdline merely MENTIONS bench.py (editor, tail -f, grep). The
-    anchored matcher must ignore mentions and still flag genuine
-    bench/matrix/chaser/Spark invocations."""
-    from tools.run_matrix import _is_stray_cmd
-
-    # mentions — must NOT flag
-    assert not _is_stray_cmd(["vim", "bench.py"])
-    assert not _is_stray_cmd(["tail", "-f", "bench.py.log"])
-    assert not _is_stray_cmd(["grep", "-n", "bench.py", "notes.md"])
-    assert not _is_stray_cmd(["less", "tools/run_matrix.py"])
-    assert not _is_stray_cmd(["bash", "-c", "grep bench.py history.txt"])
-    # genuine runs — must flag
-    assert _is_stray_cmd(["python", "bench.py"])
-    assert _is_stray_cmd(["python3", "/root/repo/bench.py", "--one", "flagship"])
-    assert _is_stray_cmd(["python", "tools/run_matrix.py"])
-    assert _is_stray_cmd(["bash", "-c", "python bench.py > /tmp/x"])
-    assert _is_stray_cmd(["bash", "/tmp/bench_idle_chaser.sh"])
-    assert _is_stray_cmd(["bash", "-c", "sleep 30; true # bench_idle_chaser"])
-    assert _is_stray_cmd(
-        ["/usr/lib/jvm/bin/java", "-cp", "x", "org.apache.spark.deploy.SparkSubmit"]
-    )
-
-
 def test_env_bool_normalizes_and_rejects(monkeypatch):
     """ADVICE r17: SPARK_GRAFT_PREFER_SMJ='1'/'yes' must toggle the
     boolean conf instead of failing Spark session init; junk raises
@@ -741,13 +169,30 @@ def test_env_bool_normalizes_and_rejects(monkeypatch):
         bench._env_bool("X_BOOL", "false")
 
 
-def test_stray_guard_flags_python_dash_m_invocations():
-    """ADVICE r17: `python -m`-style invocations of the guarded
-    scripts are strays too; module paths that merely END in the name
-    of an unguarded module stay ignored."""
-    from tools.run_matrix import _is_stray_cmd
+def test_compact_line_fits_by_construction():
+    """bench.py's stdout is captured as its tail (~2000 chars), so
+    its one JSON line must stay under 1,800 chars whatever the
+    sweep produced: the worst case is the longest declared names in
+    every capped slot and errors far past their 80-char cap."""
+    import bench
+    import __spark_entry__ as em
 
-    assert _is_stray_cmd(["python", "-m", "bench"])
-    assert _is_stray_cmd(["python3.11", "-m", "tools.run_matrix"])
-    assert not _is_stray_cmd(["python", "-m", "pytest", "tests/"])
-    assert not _is_stray_cmd(["python", "-m"])
+    longest = sorted(em.queries(), key=len, reverse=True)
+    names = [n for n in longest if n != "flagship"][:21]
+    timings = {n: 1000.123 + i for i, n in enumerate(names)}
+    timings["flagship"] = 0.5  # fastest of all: kept only by name
+    out = {
+        "metric": "total_runtime_declared_queries",
+        "value": 123456.789,
+        "unit": "sec",
+        "queries": timings,
+        "sf": 0.01,
+        "errors": {n: "E" * 300 for n in names[:3]},
+        "isolated": {n: 1000.123 for n in names[:10]},
+        "streaming_ingest_events_per_sec": 1234567,
+    }
+    line = bench.compact_line(out)
+    assert len(json.dumps(line)) <= 1800
+    assert line["queries"]["flagship"] == 0.5
+    assert len(line["queries"]) == 21
+    assert line["n_queries"] == 22 and line["n_errors"] == 3

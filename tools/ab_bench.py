@@ -10,7 +10,7 @@ only ranks candidates.
 Usage:
     python tools/ab_bench.py [--conf k=v ...] [--sf DIR] query [query ...]
 
-Prints one JSON line: {"queries": {name: sec}, "conf": {...}, "steal": r}.
+Prints one JSON line: {"queries": {name: sec}, "total": sec, "conf": {...}}.
 """
 
 from __future__ import annotations
@@ -48,7 +48,6 @@ def main() -> int:
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    s0 = bench._load_sample()
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     out: dict[str, float] = {}
     for name in names:
@@ -60,17 +59,10 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             print(f"ab error in {name}: {e}", file=sys.stderr)
             out[name] = -1.0
-    s1 = bench._load_sample()
-    ratio = bench.window_steal_ratio(
-        {"mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-         "mono1": s1["mono"], "steal1": s1["steal_jiffies"]},
-        bench._tick_hz(), bench._proc_cpus(),
-    )
     print(json.dumps({
         "queries": out,
         "total": round(sum(v for v in out.values() if v > 0), 3),
         "conf": confs,
-        "steal": round(ratio, 4) if ratio >= 0 else -1.0,
     }))
     return 0
 

@@ -7,7 +7,7 @@ warm session with bench hygiene (warm-up + min-of-2), at the graded
 caps, under the same scoped width the declared query uses.
 
 Usage: python tools/profile_dedup_report.py [--sf DIR]
-Prints one JSON line {"parts": {...}, "steal": r}.
+Prints one JSON line {"parts": {...}, "sf": DIR}.
 """
 
 from __future__ import annotations
@@ -92,7 +92,6 @@ def main() -> int:
 
         return entrymod.queries()["dedup_report"](spark, sf_dir)
 
-    s0 = bench._load_sample()
     out: dict[str, float] = {}
     for name, fn in [
         ("full", full),
@@ -103,14 +102,7 @@ def main() -> int:
         ("full2", full),
     ]:
         out[name] = round(bench._time_one(spark, fn, sf_dir), 3)
-    s1 = bench._load_sample()
-    ratio = bench.window_steal_ratio(
-        {"mono0": s0["mono"], "steal0": s0["steal_jiffies"],
-         "mono1": s1["mono"], "steal1": s1["steal_jiffies"]},
-        bench._tick_hz(), bench._proc_cpus(),
-    )
-    print(json.dumps({"parts": out, "sf": sf_dir,
-                      "steal": round(ratio, 4) if ratio >= 0 else -1.0}))
+    print(json.dumps({"parts": out, "sf": sf_dir}))
     return 0
 
 
